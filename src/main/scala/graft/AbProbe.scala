@@ -1,20 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-JVM interleaved A/B for optimization work: times the named bench
   * queries with a system property flipped off/on per rep (ABAB order), same
   * session, cleared cache per rep — so box drift lands on both variants and
   * the min-of-reps difference is tree-attributable. Usage:
   *
-  *   runMain graft.AbProbe <propName> <query...>     (e.g. graft.matcount)
+  *   runMain graft.AbProbe <propName> <query...>     (e.g. graft.pairpart)
   *
   * Variant A = prop unset (feature ON, the committed default), variant B =
   * prop "off". A prop name starting with "spark." is treated as a runtime
   * SQL conf instead: ON sets it "true", OFF sets it "false" (for boolean
-  * confs like adaptive/cached-plan toggles; the session default must make
-  * ON the committed behavior). Diagnostic only — not part of the driver
-  * contract.
+  * confs like adaptive/cached-plan toggles; the probe aborts unless the
+  * session value is "true", i.e. ON is the committed behavior). Diagnostic
+  * only — not part of the [[SparkEntry]] contract.
   */
 object AbProbe {
   def main(args: Array[String]): Unit = {
@@ -22,14 +20,20 @@ object AbProbe {
     val prop = args.head
     val names = args.tail.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps  = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // sys-prop hooks flip operator code paths; "spark."-prefixed names flip
+    // a boolean runtime SQL conf instead, whose session value must be the
+    // committed ON behavior or the ON/OFF labels below would be wrong
+    val isConf = prop.startsWith("spark.")
+    if (isConf) {
+      val cur = spark.conf.getOption(prop)
+      if (!cur.contains("true")) {
+        spark.stop()
+        sys.error(s"AbProbe: $prop is ${cur.getOrElse("unset")} in this session; " +
+          "spark.* mode needs a boolean conf whose session value is \"true\"")
+      }
+    }
 
     val qs = Queries.all.filter(q => q.bench && names(q.name))
     def run(q: Q): Double = {
@@ -38,9 +42,6 @@ object AbProbe {
       q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    // sys-prop hooks flip operator code paths; "spark."-prefixed names flip
-    // a boolean runtime SQL conf instead (ON=true must be the session default)
-    val isConf = prop.startsWith("spark.")
     def setOn(): Unit  = if (isConf) spark.conf.set(prop, "true") else { sys.props.remove(prop); () }
     def setOff(): Unit = if (isConf) spark.conf.set(prop, "false") else { sys.props(prop) = "off"; () }
     qs.foreach { q =>

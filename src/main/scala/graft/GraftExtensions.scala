@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** `spark.sql.extensions`-pluggable registration of every graft SQL function:
   *
   * {{{
-  * SparkSession.builder.config("spark.sql.extensions", "graft.GraftExtensions")
+  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

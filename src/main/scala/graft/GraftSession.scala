@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
   * edit, not a code edit. On a real cluster the master/partition settings
   * come from spark-submit and AQE handles runtime re-planning (skew splits,
   * shuffle coalescing), so everything except the nanos flag is advisory.
+  * The SQL confs the engine needs are one list, [[runtimeConfs]].
   *
   * | env                             | default    | meaning                    |
   * |---------------------------------|------------|----------------------------|
@@ -25,14 +26,18 @@ object GraftSession {
   private def env(name: String, default: => String): String =
     sys.env.getOrElse(name, default)
 
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** The runtime SQL confs the engine relies on — the one definition both
+    * [[configure]] (session build) and [[applyRuntimeConfs]] (a session
+    * built elsewhere, e.g. by a host application) install.
+    */
+  val runtimeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // testdata events.parquet stores INT64 TIMESTAMP(NANOS), which Spark's
     // parquet reader rejects by default; read as epoch-nano longs instead and
     // convert to a microsecond timestamp in Tables.events.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // Parquet TIMESTAMP(isAdjustedToUTC=false) — the driver's post-r7 events
     // vintage, and orders/lineitem dates in every vintage — reads as plain
     // TIMESTAMP (epoch micros taken verbatim) instead of TIMESTAMP_NTZ.
@@ -40,7 +45,7 @@ object GraftSession {
     // `cast(ntz as timestamp)` the adapter used to do, but WITHOUT the
     // per-row convertTz (a microsToInstant/LocalDateTime round trip, two
     // java.time allocations per row) that taxed every events-scanning query.
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
     // ObjectHashAggregate (keep_latest, collect_list) falls back to
     // sort-based aggregation after this many hash-map keys per task; the
     // 128-key default sorts almost immediately, re-creating the
@@ -53,15 +58,15 @@ object GraftSession {
     // sizing, same as for HashAggregate: keys-per-task = keys/partitions
     // must fit the executor, and deployments with huge per-key buffers
     // should lower SPARK_GRAFT_OBJ_AGG_FALLBACK instead of raising memory.
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      env("SPARK_GRAFT_OBJ_AGG_FALLBACK", "1048576"))
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+      env("SPARK_GRAFT_OBJ_AGG_FALLBACK", "1048576"),
     // Defensive cap: AQE posts a full explainString on EVERY plan update,
     // and iterative workloads whose round-k plan nests round k-1's
     // InMemoryRelation (e.g. BPE learning before its lineage truncation)
     // make that string superlinear in rounds — the default 2 GiB cap let a
     // KB-sized table burn minutes of driver CPU building plan text. 1 MiB
     // keeps every legitimate explain intact.
-    .config("spark.sql.maxPlanStringLength", env("SPARK_GRAFT_MAX_PLAN_STR", "1048576"))
+    "spark.sql.maxPlanStringLength" -> "1048576",
     // Let AQE re-plan INSIDE persisted-plan materializations (off by default
     // upstream so a cache's output partitioning stays stable for consumers
     // that reuse it). The dedup family materializes every persist under
@@ -71,11 +76,20 @@ object GraftSession {
     // launch overhead; the same pattern in every materializedPairs call).
     // Scale-adaptive by construction (AQE sizes from runtime bytes); no
     // consumer here relies on a cache's physical partitioning (the pair
-    // caches are joined/aggregated through their own exchanges).
-    // SPARK_GRAFT_CACHED_PLAN_AQE=false restores the upstream default.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      env("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-    .config("spark.ui.enabled", "false")
+    // caches are joined/aggregated through their own exchanges), except
+    // those that opt out via [[withStableCachePartitioning]]
+    // (OPTIMIZATION_r22.md §1).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
+    runtimeConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+      .config("spark.ui.enabled", "false")
+
+  /** Install [[runtimeConfs]] on a live session; idempotent, so any entry
+    * point may call it on a session it did not build.
+    */
+  def applyRuntimeConfs(spark: SparkSession): Unit =
+    runtimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
 
   /** Run `body` with cached-plan AQE re-partitioning OFF, so frames
     * persisted inside keep their exchange-established output partitioning
@@ -88,6 +102,10 @@ object GraftSession {
     * partitioning and the consumer re-shuffles the cached rows. The conf is
     * read when the plan is cached (persist call), so the scope must cover
     * the persist itself; covering the first materialization too is safe.
+    *
+    * Assumes one thread per session: the conf is session-global, so
+    * a concurrent persist() on the same session from another thread would
+    * inherit the stable setting or race the restore.
     */
   def withStableCachePartitioning[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -100,11 +118,12 @@ object GraftSession {
     }
   }
 
-  /** Local session sized by SPARK_GRAFT_CPUS (driver contract). */
+  /** Local session sized by SPARK_GRAFT_CPUS — the one place every main
+    * and spec gets its session from.
+    */
   def local(cpus: String = env("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = configure(
-      SparkSession
-        .builder()
+      SparkSession.builder()
         .master(env("SPARK_GRAFT_MASTER", s"local[$cpus]"))
         .appName("graft")
         .config("spark.sql.shuffle.partitions",

@@ -6,19 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The driver's session isn't built by [[GraftSession]], so set the
-    * runtime confs the engine needs and register the SQL functions here.
+    * A host application's session isn't built by [[GraftSession]], so
+    * install the engine's runtime confs (UTC zone for date_format
+    * rendering, nanos and NTZ parquet reads, ...) and register the SQL
+    * functions here.
     */
   def entry(spark: SparkSession): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the one session-TZ-sensitive surface is date_format rendering
-    // (a23/b54); pin the zone like GraftSession does so a foreign host
-    // session can't skew it (r11 verdict task #1c)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // epoch-micros identity for the NTZ events vintage regardless of the
-    // host session's zone (see GraftSession)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+    GraftSession.applyRuntimeConfs(spark)
     GraftFunctions.register(spark)
     Queries.all.find(_.name == "a00_pipeline_e2e").get.fn(spark, "/root/testdata/sf0.001")
   }

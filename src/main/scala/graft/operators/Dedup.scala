@@ -18,10 +18,11 @@ import graft.functions._
 object Dedup {
 
   /** LSH candidate pairs: all (id_a < id_b) pairs co-bucketed by some
-    * (band, key), distinct. The shared core of every banding scheme here —
-    * since r21 one capped-collect aggregation per bucket with in-row pair
-    * generation (same output as the previous (band, key) self-join, one
-    * pass over the banded frame instead of two).
+    * (band, key), distinct. The shared core of every banding scheme here:
+    * one capped-collect aggregation per bucket with in-row pair generation
+    * (one pass over the banded frame, no broadcast; chosen over a
+    * count + anti-join + (band, key) self-join shape, OPTIMIZATION_r21.md
+    * §4).
     *
     * `maxBucket` caps degenerate buckets (e.g., a boilerplate fragment shared
     * by millions of documents makes one (band, key) quadratic — the classic
@@ -32,36 +33,14 @@ object Dedup {
     */
   private def bandJoinCandidates(banded: DataFrame,
                                  maxBucket: Int = 100000): DataFrame = {
-    // measurement hook (AbProbe): -Dgraft.bandjoin=v1 restores the
-    // count + broadcast-anti-join + self-join shape for in-JVM A/B
-    if (sys.props.get("graft.bandjoin").exists(v => v == "v1" || v == "off")) {
-      val hot = banded.groupBy("band", "key").count()
-        .filter(col("count") > maxBucket).select("band", "key")
-      val cold = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
-      return cold.as("a")
-        .join(cold.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-    }
-    // r21: ONE aggregation replaces the previous count-pass + broadcast
-    // anti-join + (band, key) self-join. collect_capped gathers each
-    // bucket's ids (sorted ascending, NULL past maxBucket — the same
-    // "bucket size > maxBucket ⇒ dropped" semantics the anti-join had) and
-    // pairs generate in-row from the sorted array: position i pairs with
-    // every later position, so id_a < id_b and each unordered pair appears
-    // once per bucket — exactly the self-join's output, with one pass over
-    // the banded frame instead of two and no broadcast. The per-bucket
-    // quadratic is identical to the join's (a bucket's pairs always
-    // co-reside in one task either way); the cap bounds both. Distinct
-    // across bands is unchanged.
-    // r22 (ADVICE): null band keys are dropped BEFORE the groupBy — v1's
-    // equi-join could never match them, but groupBy treats null as a value
-    // and would pool every null-key doc into one quadratic bucket (paired
-    // candidates that only the downstream null-metric filter discards).
-    // Output is unchanged on any input; candidate volume stops blowing up
-    // on dirty corpora (e.g. null-text docs under simhashPairs).
+    // collect_capped gathers each bucket's ids (sorted ascending, NULL past
+    // maxBucket) and pairs generate in-row from the sorted array: position
+    // i pairs with every later position, so id_a < id_b and each unordered
+    // pair appears once per bucket. The per-bucket quadratic is bounded by
+    // the cap. Null band keys are dropped BEFORE the groupBy — groupBy
+    // treats null as a value and would pool every null-key doc into one
+    // quadratic bucket (candidates that only the downstream null-metric
+    // filter discards; OPTIMIZATION_r22.md §3).
     val emitted = banded.filter(col("key").isNotNull)
       .groupBy("band", "key")
       .agg(graft.functions.collect_capped(col("id"), maxBucket).as("ids"))

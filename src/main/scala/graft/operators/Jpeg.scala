@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** JPEG/JFIF codec (baseline + progressive) — pure Scala, no codec library (SURVEY.md §2
-  * group F; closes the round-5 verdict's "JPEG baseline decode or retire
-  * stubDecode" item). JPEG is the dominant image format in any real
+  * group F). JPEG is the dominant image format in any real
   * training-data crawl, and unlike BMP/PGM/WAV it is an ENTROPY-CODED
   * lossy format: markers + quantization tables + canonical Huffman tables
   * + DCT blocks + byte stuffing + restart markers. Everything here is

@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * filters, [[Png]]), FLAC (Rice-coded lossless audio with stereo
   * decorrelation, [[Flac]]), and GIF (LZW + interlace, [[Gif]]). Only
   * perceptual-audio codecs (MP3/AAC) genuinely need a third-party
-  * library; [[Multimodal.stubDecode]] marks that one remaining seam — a
-  * production deployment swaps it for a real codec (or an Arrow batch
-  * UDF) without touching the surrounding plan, exactly as the eight real
-  * decoder families do.
+  * library; a deployment adds one as another `decode<Fmt>` entry point
+  * over [[MMRecord]] (or an Arrow batch UDF) without touching the
+  * surrounding plan, exactly as the eight real decoder families do.
   */
 object Multimodal {
 
@@ -31,54 +30,9 @@ object Multimodal {
   /** An opaque media payload plus its id. */
   case class MMRecord(doc_id: Long, payload: Array[Byte])
 
-  /** Extracted features: byte stats stand in for real image features. */
-  case class MMFeatures(doc_id: Long, n_bytes: Int, width: Int, height: Int,
-                        mean_byte: Double, p_hash: Long)
-
-  /** STUB decoder — deterministic fake of an image decode + feature extract.
-    * "width"/"height" are read from the leading bytes, the perceptual hash is
-    * a real hash of the payload; a real implementation would decode pixels
-    * here. Everything is a pure function of the payload (reproducible across
-    * executors/retries, which is what matters for the plumbing).
-    *
-    * SCOPE (final — SURVEY.md §2.F "Perceptual-audio seam — CLOSED"): with
-    * BMP/PGM/WAV/frame-container/JPEG/PNG/FLAC/GIF all real, this stub
-    * marks ONLY the perceptual-audio (MP3/AAC) boundary — psychoacoustic decode
-    * needs a codec library this environment cannot provide; plugging one in
-    * is a `decodeFlac`-shaped adapter behind this same seam.
-    */
-  def stubDecode(r: MMRecord): MMFeatures = {
-    val b = r.payload
-    val n = b.length
-    var sum = 0L
-    var h = 0x9e3779b97f4a7c15L
-    var i = 0
-    while (i < n) {
-      sum += (b(i) & 0xff)
-      h = graft.functions.TextHash.mix(h ^ (b(i) & 0xffL))
-      i += 1
-    }
-    val width = if (n >= 2) ((b(0) & 0xff) << 8 | (b(1) & 0xff)) % 4096 else 0
-    val height = if (n >= 4) ((b(2) & 0xff) << 8 | (b(3) & 0xff)) % 4096 else 0
-    val mean = if (n == 0) 0.0 else math.rint(sum.toDouble / n * 10000) / 10000
-    MMFeatures(r.doc_id, n, width, height, mean, h)
-  }
-
-  /** Batched per-partition feature extraction over a binary payload column.
-    * `mapPartitions` keeps any per-partition decoder init (model load, codec
-    * context) amortized — the same shape a real decoder needs.
-    */
-  def extractFeatures(spark: SparkSession, df: DataFrame,
-                      idCol: String, payloadCol: String): Dataset[MMFeatures] = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("doc_id"), col(payloadCol).as("payload"))
-      .as[MMRecord]
-      .mapPartitions { it => it.map(stubDecode) }
-  }
-
   // -------------------------------------------------------------- real PGM
 
-  /** Decoded grayscale image features (REAL decode, not the stub). */
+  /** Decoded grayscale image features. */
   case class PgmFeatures(doc_id: Long, width: Int, height: Int,
                          n_pixels: Int, mean_gray: Double)
 
@@ -86,10 +40,7 @@ object Multimodal {
     * bytes-on-the-wire format needing no codec library: magic, ASCII
     * dimensions and maxval, one whitespace, then `w*h` raw pixel bytes.
     * Returns None on any malformed payload (dead-letter, never throw — the
-    * same poisoned-message discipline as the capnp decoder). This is the
-    * existence proof that [[stubDecode]]'s seam takes a real decoder (JPEG
-    * and PNG since got their own, [[Jpeg]]/[[Png]]): only compressed audio
-    * stays stubbed in this container.
+    * same poisoned-message discipline as the capnp decoder).
     */
   def decodePgm(docId: Long, b: Array[Byte]): Option[PgmFeatures] = {
     var i = 0

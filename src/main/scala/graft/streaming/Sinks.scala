@@ -55,11 +55,4 @@ object Sinks {
       .partitionBy("batch_id")
       .parquet(path)
   }
-
-  /** Append-only parquet sink with rate limiting (at-least-once). */
-  def rateLimitedAppend(path: String, limiter: RateLimiter): (DataFrame, Long) => Unit = {
-    (batch, _) =>
-      limiter.acquire()
-      batch.write.mode("append").parquet(path)
-  }
 }

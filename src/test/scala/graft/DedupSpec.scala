@@ -67,14 +67,33 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(over.forall(identity), "cap 9 < group size 10 must evaluate to NULL")
   }
 
-  test("band-join v2 (capped-collect) emits exactly the v1 self-join pair set") {
-    def pairSet(): Set[(Long, Long, Double)] =
-      Dedup.minhashPairs(corpus, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val v2 = pairSet()
-    sys.props("graft.bandjoin") = "v1"
-    val v1 = try pairSet() finally sys.props.remove("graft.bandjoin")
-    assert(v2 == v1, s"v2 minus v1: ${v2 diff v1}; v1 minus v2: ${v1 diff v2}")
+  test("minhash pairs equal a brute-force band-key reference on the corpus") {
+    import graft.functions.TextHash
+    import org.apache.spark.unsafe.types.UTF8String
+    // minhashPairs' defaults: k=3 shingles, n=128 signature, 32 bands;
+    // token-less (and null-text) docs have no signature and never pair
+    val docsSh = corpus.select("doc_id", "text").collect().toSeq
+      .filterNot(_.isNullAt(1))
+      .map { r =>
+        val sh = TextHash.wordShingles(UTF8String.fromString(r.getString(1)), 3)
+        val keys = TextHash.lshBandKeys(TextHash.minhashSigFromShingles(sh, 128), 32)
+        (r.getLong(0), sh.toLongArray().toSet, keys.toLongArray())
+      }
+      .filter(_._2.nonEmpty)
+    val expected = (for {
+      (ida, sa, ka) <- docsSh
+      (idb, sb, kb) <- docsSh
+      if ida < idb && ka.indices.exists(b => ka(b) == kb(b))
+      inter = (sa intersect sb).size
+      j = inter.toDouble / (sa.size + sb.size - inter)
+      if j >= 0.5
+    } yield (ida, idb,
+      BigDecimal(j).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+    val got = Dedup.minhashPairs(corpus, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(expected.nonEmpty)
+    assert(got == expected,
+      s"got minus expected: ${got diff expected}; expected minus got: ${expected diff got}")
   }
 
   test("simhash finds planted exact dups at hamming 0") {

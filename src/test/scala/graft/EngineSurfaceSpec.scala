@@ -10,12 +10,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class EngineSurfaceSpec extends AnyFunSuite with SparkTestBase {
 
   test("entry works on a session missing graft configs (driver smoke)") {
-    // simulate the driver's vanilla session: flag off until entry sets it
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    // simulate a host application's vanilla session: foreign zone, nanos flag off
+    // and NTZ inference on until entry installs the engine's confs
+    val foreign = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+      "spark.sql.session.timeZone" -> "America/Los_Angeles",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true")
+    val prior = GraftSession.runtimeConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    foreign.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val df = SparkEntry.entry(spark)
+      GraftSession.runtimeConfs.foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, s"$k after entry")
+      }
       assert(df.count() > 0)
-    } finally spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("SQL surface: registered functions work through spark.sql") {

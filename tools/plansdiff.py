@@ -25,6 +25,9 @@ Two grains:
   vanishes when bracket-list items are sorted is auto-ANNOTATED
   "[known-benign: attribute-order permutation, tree unchanged]" (the
   documented b53 Expand class); annotation only — exit code unchanged.
+  No annotation when a differing line is one whose item ORDER is semantic:
+  the sort order of a Sort/TakeOrderedAndProject/Window block, the
+  Left/Right keys of a SortMergeJoin, or any hashpartitioning(...) line.
 - --tree: compares only each plan's operator-tree section (the lines
   before the first `(n) NodeName` detail block). Immune to attribute-order
   permutation; a --tree diff IS a structural plan change. Read the pair:
@@ -142,6 +145,34 @@ def _sort_bracket_items(s: str) -> str:
 
 def permutation_canonical(lines: list) -> list:
     return [_sort_bracket_items(l) for l in lines]
+
+
+# Detail-block lines whose list ORDER is the plan's meaning, per operator:
+# a swapped sort key or join-key pairing is a genuine change even though it
+# sorts equal under _sort_bracket_items.
+_ORDER_SENSITIVE = {
+    "Sort": ("Arguments:",),
+    "TakeOrderedAndProject": ("Arguments:",),
+    "Window": ("Arguments:",),
+    "SortMergeJoin": ("Left keys", "Right keys"),
+}
+_DETAIL_OP = re.compile(r"^\s*\(N\) ([A-Z]\S*)")
+
+
+def order_sensitive_diff(old_lines: list, new_lines: list) -> bool:
+    """True when a line that differs between two equal-length normalized
+    plans belongs to an order-sensitive node or argument (_ORDER_SENSITIVE,
+    or any hashpartitioning(...) line) — such a diff must not be annotated
+    as an attribute-order permutation."""
+    op = None
+    for a, b in zip(old_lines, new_lines):
+        m = _DETAIL_OP.match(a)
+        if m:
+            op = m.group(1)
+        if a != b and ("hashpartitioning(" in a or any(
+                a.startswith(p) for p in _ORDER_SENSITIVE.get(op, ()))):
+            return True
+    return False
 
 
 def buildside_canonical(lines: list) -> list:
@@ -339,8 +370,8 @@ Arguments: 25
         # full-grain annotation of the documented attribute-order permutation
         # class (r22, the b53 follow-through): a detail-line diff that
         # vanishes when bracket-list items are sorted, on a tree-unchanged
-        # plan, gets the annotation; exit stays 1; a genuine item change or
-        # a tree change carries NO annotation
+        # plan, gets the annotation; exit stays 1; a genuine item change, a
+        # tree change, or a reorder of sort/join keys carries NO annotation
         pnote = "[known-benign: attribute-order permutation, tree unchanged]"
         permuted = base.replace("Output [2]: [u, v]", "Output [2]: [v, u]")
         nested = base.replace("Output [2]: [u, v]",
@@ -349,11 +380,27 @@ Arguments: 25
                                    "Arguments: [[u, null, 2], [v, u, 1]], [v, u]")
         genuine = base.replace("Output [2]: [u, v]", "Output [2]: [u, w]")
         tree_and_perm = permuted.replace("+- Exchange (4)", "+- Sort (4)")
+        sorted_ = base.replace("(9) CollectLimit",
+                               "(8) Sort [codegen id : 4]\n"
+                               "Input [2]: [x, y]\n"
+                               "Arguments: [x ASC NULLS FIRST, y ASC NULLS FIRST], false, 0\n"
+                               "(10) SortMergeJoin [codegen id : 4]\n"
+                               "Left keys [2]: [x, y]\n"
+                               "Right keys [2]: [a, b]\n"
+                               "(9) CollectLimit")
+        sort_keys_swapped = sorted_.replace("[x ASC NULLS FIRST, y ASC NULLS FIRST]",
+                                            "[y ASC NULLS FIRST, x ASC NULLS FIRST]")
+        smj_keys_swapped = sorted_.replace("Right keys [2]: [a, b]",
+                                           "Right keys [2]: [b, a]")
+        sort_input_perm = sorted_.replace("Input [2]: [x, y]", "Input [2]: [y, x]")
         perm_cases = [
             (base, permuted, 1, True, "attribute permutation -> annotated, exit 1"),
             (nested, nested_perm, 1, True, "nested Expand-branch permutation -> annotated"),
             (base, genuine, 1, False, "genuine item change -> no annotation"),
             (permuted, tree_and_perm, 1, False, "permutation + tree change -> no annotation"),
+            (sorted_, sort_keys_swapped, 1, False, "swapped Sort keys -> no annotation"),
+            (sorted_, smj_keys_swapped, 1, False, "swapped SortMergeJoin keys -> no annotation"),
+            (sorted_, sort_input_perm, 1, True, "Sort Input-list permutation -> annotated"),
         ]
         for i, (old_t, new_t, want, want_note, label) in enumerate(perm_cases):
             fa = os.path.join(d, f"pa{i}.txt")
@@ -401,7 +448,8 @@ def main(argv) -> int:
             note = " [known-benign: run-level AQE build-side flip]"
         elif (not a.tree
                 and old_tree.get(k) == new_tree.get(k)
-                and permutation_canonical(old[k]) == permutation_canonical(new[k])):
+                and permutation_canonical(old[k]) == permutation_canonical(new[k])
+                and not order_sensitive_diff(old[k], new[k])):
             note = " [known-benign: attribute-order permutation, tree unchanged]"
         print(f"CHANGED {k} ({len(old[k])} -> {len(new[k])} lines){note}")
     if a.show:
