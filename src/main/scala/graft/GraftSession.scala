@@ -14,6 +14,23 @@ import org.apache.spark.sql.SparkSession
   * shuffle coalescing), so everything except the nanos flag is advisory.
   * The SQL confs the engine needs are one list, [[runtimeConfs]].
   *
+  * Local filesystem: [[configure]] also binds Hadoop's `file:` scheme to
+  * [[graft.io.ForkFreeLocalFileSystem]] (`spark.hadoop.fs.file.impl`, the
+  * `FileSystem` API) and [[graft.io.ForkFreeLocalFs]]
+  * (`spark.hadoop.fs.AbstractFileSystem.file.impl`, the `FileContext` API
+  * that streaming checkpoints use). Without native `libhadoop`, stock Hadoop
+  * starts a `chmod` process for every local file or directory it creates and
+  * `readlink` processes on every `FileContext.rename`: on a 4-vCPU Xeon VM,
+  * `FileSystem.create` + close costs 5.5 ms stock and 0.27 ms with these
+  * classes, `FileContext.rename` 9.8 ms and 0.17 ms, and a streaming
+  * micro-batch writes about a dozen such files (offset, commit and source
+  * logs, state-store deltas, sink part files). The replacement
+  * does both in-process and keeps the stock answer otherwise; HDFS, S3 and
+  * every other scheme are untouched. The keys are fixed, not knobs, and are
+  * applied only when a session is BUILT: Hadoop caches one `FileSystem` per
+  * scheme per process, so [[applyRuntimeConfs]] (and `SparkEntry.entry`,
+  * which calls it) leave a host session's filesystem as it is.
+  *
   * | env                             | default    | meaning                    |
   * |---------------------------------|------------|----------------------------|
   * | SPARK_GRAFT_CPUS                | 32         | local[N] + shuffle default |
@@ -84,6 +101,10 @@ object GraftSession {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     runtimeConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.ForkFreeLocalFs].getName)
 
   /** Install [[runtimeConfs]] on a live session; idempotent, so any entry
     * point may call it on a session it did not build.

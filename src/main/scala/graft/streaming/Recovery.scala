@@ -10,19 +10,21 @@ import graft.sources.KafkaShaped
   * (`/root/reference/anonymizer/src/lib.rs` run loop: consume → decode →
   * anonymize → batch insert; `sink.rs` replay + manual offset commit
   * AFTER the insert). Here: Kafka-shaped frames → decode with dead-letter
-  * split → anonymize → offset-keyed watermark dedup → per-micro-batch
-  * partial totals through the idempotent replace-partition sink — plus
-  * the crash window the idempotent sink exists for, made inducible so the
-  * gated row (g13) can certify recovery, not just describe it.
+  * split → anonymize → (partition, offset)-keyed watermark dedup →
+  * per-micro-batch partial totals through the idempotent replace-partition
+  * sink — plus the crash window the idempotent sink exists for, made
+  * inducible so the gated row (g13) can certify recovery, not just
+  * describe it.
   *
   * Exactly-once argument, piece by piece (each half pinned separately in
   * StreamingSpec, the composition hash-gated end-to-end in g13):
   *  - at-least-once REDELIVERY (the broker re-sending a committed-but-
   *    unacked message) is removed by [[offsetKeyedLogs]]'s
-  *    `dropDuplicatesWithinWatermark` on the frame OFFSET — the
-  *    reference's own dedup key (source.rs manual offsets; its
-  *    ReplacingMergeTree collapses replayed rows the same way). State is
-  *    bounded by the watermark, exactly like g02.
+  *    `dropDuplicatesWithinWatermark` on the frame's (partition, offset)
+  *    — the reference's own dedup key (source.rs manual offsets, which
+  *    Kafka numbers per partition; its ReplacingMergeTree collapses
+  *    replayed rows the same way). State is bounded by the watermark,
+  *    exactly like g02.
   *  - at-least-once REPROCESSING (crash after the sink write, before the
   *    checkpoint's offset commit — [[crashBeforeCommit]] induces it) is
   *    absorbed by [[Sinks.idempotentParquet]]: the replayed micro-batch
@@ -37,14 +39,14 @@ object Recovery {
     Seq("ts_hour", "resource_id", "response_status", "cache_status", "remote_addr")
 
   /** Frames → decoded/dead-letter-split → anonymized → watermarked →
-    * offset-deduped logs. Works identically on a batch frame table (the
-    * oracle posture) and a streaming one (the deployment posture) — the
-    * g01/g11 one-function-both-postures discipline.
+    * (partition, offset)-deduped logs. Works identically on a batch frame
+    * table (the oracle posture) and a streaming one (the deployment
+    * posture) — the g01/g11 one-function-both-postures discipline.
     */
   def offsetKeyedLogs(frames: DataFrame): DataFrame = {
     val (good, _) = KafkaShaped.decodeSplit(frames)
     val logs = HttpLogPipeline.anonymize(good.select(
-      col("offset"),
+      col("partition"), col("offset"),
       expr("timestamp_millis(r.ts_milli)").as("ts"),
       col("r.resource_id").as("resource_id"),
       col("r.bytes_sent").as("bytes_sent"),
@@ -53,14 +55,14 @@ object Recovery {
       col("r.cache_status").as("cache_status"),
       col("r.remote_addr").as("remote_addr")))
     HttpLogPipeline.dedupReplayed(
-      HttpLogPipeline.withEventTimeBounds(logs), Seq("offset"))
+      HttpLogPipeline.withEventTimeBounds(logs), Seq("partition", "offset"))
   }
 
   /** foreachBatch sink: this micro-batch's PARTIAL hourly totals into its
     * own batch_id partition (idempotent under replay). */
   def totalsBatchSink(sinkDir: String): (DataFrame, Long) => Unit = {
     (batch, batchId) =>
-      val partial = HttpLogPipeline.windowedTotals(batch.drop("offset"))
+      val partial = HttpLogPipeline.windowedTotals(batch.drop("partition", "offset"))
         .select(col("window.start").as("ts_hour"),
           col("resource_id"), col("response_status"), col("cache_status"),
           col("remote_addr"),

@@ -251,6 +251,69 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(after == 30, s"expected 30 total requests, got $after")
   }
 
+  test("offset-keyed dedup keeps distinct frames of different partitions that share an offset") {
+    // Kafka numbers offsets per partition: (p0, 5) and (p1, 5) are two
+    // messages; only a redelivery of the same (partition, offset) is one
+    val two = encodedPayloads(2).collect()
+    def frame(payload: Int, partition: Int) = org.apache.spark.sql.Row(
+      null, two(payload).getAs[Array[Byte]]("value"), "http_log", partition, 5L,
+      new Timestamp(0L), 0)
+    def frames(rows: org.apache.spark.sql.Row*) = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), KafkaShaped.frameSchema)
+    val first = frames(frame(0, 0), frame(1, 1))
+    val replay = frames(frame(0, 0))
+    assert(Recovery.offsetKeyedLogs(first.unionByName(replay)).count() == 2)
+
+    withTempDir("graft_partition_offsets") { tmp =>
+      val framesDir = s"$tmp/frames"; val sink = s"$tmp/sink"
+      first.coalesce(1).write.mode("append").parquet(framesDir)
+      replay.coalesce(1).write.mode("append").parquet(framesDir)
+      Recovery.runUntilDrained(spark, framesDir, s"$tmp/ckpt", sink)
+      val requests = Recovery.finalTotals(spark, sink)
+        .agg(sum("requests")).collect().head.getLong(0)
+      assert(requests == 2, "distinct frames merged or the redelivery counted")
+    }
+  }
+
+  test("a streaming drain on the graft session starts no process") {
+    withTempDir("graft_forks") { tmp =>
+      val framesDir = s"$tmp/frames"
+      val frames = KafkaShaped.framesFromPayloads(encodedPayloads(20), "value", "log_id")
+      Seq(col("offset") < 10, col("offset") >= 10).foreach { half =>
+        frames.filter(half).coalesce(1).write.mode("append").parquet(framesDir)
+      }
+      val forks = new java.util.concurrent.atomic.AtomicInteger()
+      val flushes = new java.util.concurrent.atomic.AtomicInteger()
+      val rs = new jdk.jfr.consumer.RecordingStream()
+      try {
+        rs.enable("jdk.ProcessStart")
+        rs.onEvent("jdk.ProcessStart", _ => forks.incrementAndGet())
+        rs.onFlush(() => flushes.incrementAndGet())
+        rs.startAsync()
+        // the stream is live once it has flushed once
+        val t0 = System.nanoTime()
+        while (flushes.get() == 0 && System.nanoTime() - t0 < 30e9) Thread.sleep(50)
+        assert(flushes.get() > 0, "JFR stream never flushed")
+        Recovery.runUntilDrained(spark, framesDir, s"$tmp/ckpt", s"$tmp/sink")
+        // events committed during the drain arrive by the second flush after it
+        val seen = flushes.get()
+        val t1 = System.nanoTime()
+        while (flushes.get() < seen + 2 && System.nanoTime() - t1 < 30e9) Thread.sleep(50)
+        assert(flushes.get() >= seen + 2, "JFR stream stopped flushing")
+      } finally rs.close()
+      val requests = Recovery.finalTotals(spark, s"$tmp/sink")
+        .agg(sum("requests")).collect().head.getLong(0)
+      assert(requests == 20)
+      assert(forks.get() == 0, s"${forks.get()} processes started during the drain")
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    val local = new java.net.URI("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.get(local, conf)
+      .isInstanceOf[graft.io.ForkFreeLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(local, conf)
+      .getDefaultFileSystem.isInstanceOf[graft.io.ForkFreeLocalFs])
+  }
+
   test("crashBeforeCommit cuts source logs loudly: compacted entries refuse, plain entries must delete") {
     // r12 ADVICE: erased trailing batches' per-source file-log entries used
     // a discarded del(...) that matched only plain numeric names — a
